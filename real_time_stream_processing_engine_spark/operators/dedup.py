@@ -37,11 +37,9 @@ MAX_BUCKET = 4096
 
 def _cap_buckets(
     buckets: DataFrame,
-    arr_col: str | None,
+    arr_col: str,
     max_bucket: int | None,
     on_overflow: str,
-    size_col=None,
-    what: str = "bucket",
 ) -> tuple[DataFrame, DataFrame | None]:
     """Enforce the mega-bucket cap on a (key, collect_list) frame.
 
@@ -65,16 +63,13 @@ def _cap_buckets(
         return buckets, None
     if on_overflow not in ("drop", "error"):
         raise ValueError(f"on_overflow must be 'drop' or 'error', got {on_overflow!r}")
-    # size either from a collect_list column or a caller-supplied count
-    # column (the prefix-filter variant caps a (gram, count) frame — it
-    # used to re-implement this whole contract inline; r7 review)
-    size = size_col if size_col is not None else F.size(arr_col)
+    size = F.size(arr_col)
     if on_overflow == "error":
         chk = F.when(
             size > max_bucket,
             F.raise_error(
                 F.concat(
-                    F.lit(f"{what} exceeds max_bucket={max_bucket}: size="),
+                    F.lit(f"bucket exceeds max_bucket={max_bucket}: size="),
                     size.cast("string"),
                 )
             ).cast("boolean"),
@@ -267,8 +262,7 @@ def ngram_jaccard_pairs(
     for the size lookups).  Bucket cost is sum of squared gram
     frequencies — safe when shingles are high-order (k>=3 word shingles
     are rare almost everywhere); for corpora where even k-shingles run
-    hot, use ``ngram_jaccard_pairs_blocked`` (bounded blocks) or
-    ``ngram_jaccard_pairs_prefix`` (Zipfian vocab) below.
+    hot, cap them with ``max_bucket``.
     Jaccard = |A∩B| / (|A|+|B|-|A∩B|).
 
     ``max_bucket`` drops (with overflow accounting — the returned
@@ -325,238 +319,6 @@ def ngram_jaccard_pairs(
     )
     pairs.bucket_overflow = overflow_stats
     return pairs
-
-
-def ngram_jaccard_pairs_blocked(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    block_col: str | None = "lang",
-    k: int = 2,
-    threshold: float = 0.5,
-    n_salt: int = 16,
-) -> DataFrame:
-    """Exact n-gram Jaccard similarity for pairs within a blocking key.
-
-    Each doc is reduced to its distinct-gram array ONCE; pairs meet on
-    the block key and are verified with ``array_intersect`` — the gram
-    sets never explode into a gram-keyed self-join.  (A gram self-join
-    is quadratic in gram frequency: one bigram shared by a million docs
-    would alone produce 5e11 join rows.  When gram frequencies are
-    Zipfian with a long rare tail, ``ngram_jaccard_pairs_prefix`` below
-    generates candidates from rare-gram prefixes instead; with small
-    blocks — LSH buckets, IVF cells, language+length strata — direct
-    blocked verification is cheaper and is the default here.)
-    Jaccard = |A∩B| / (|A|+|B|-|A∩B|).
-
-    Three scale levers on the verification join:
-    - gram sets are 64-bit ``xxhash64`` arrays, so each intersection
-      compares longs, not strings (counts are exact absent a 2^-64
-      collision inside one pair's union);
-    - a ``n_salt``-cell grid salt splits each block's pair space across
-      ``n_salt`` tasks (one side replicated n_salt times — the standard
-      replicate-vs-parallelize trade for self-joins on few-valued keys);
-    - the Jaccard length filter (t*|A| <= |B| <= |A|/t, epsilon-guarded
-      against binary-double slop in t*|A| — the same 0.07*100 =
-      7.000000000000001 case the prefix variant documents) prunes
-      pairs before any intersection is computed.
-
-    Rows with a NULL ``block_col`` are EXCLUDED by declaration (they
-    carry no blocking key to meet on) — explicitly, not as an accident
-    of join semantics (r7 review)."""
-    cols = [id_col] + ([block_col] if block_col else [])
-    base = df.filter(F.col(block_col).isNotNull()) if block_col else df
-    docs = _gram_arrays(base, cols, text_col, k)
-    blk = [block_col] if block_col else []
-    a = docs.select(
-        *blk,
-        F.col(id_col).alias("doc_a"),
-        F.col("grams").alias("_ga"),
-        F.col("n_grams").alias("_na"),
-    ).withColumn("_cell", F.pmod(F.xxhash64("doc_a"), F.lit(n_salt)))
-    b = docs.select(
-        *blk,
-        F.col(id_col).alias("doc_b"),
-        F.col("grams").alias("_gb"),
-        F.col("n_grams").alias("_nb"),
-    ).withColumn("_cell", F.explode(F.array(*[F.lit(i) for i in range(n_salt)])))
-    inter = F.size(F.array_intersect("_ga", "_gb"))
-    return (
-        a.join(b, blk + ["_cell"])
-        .filter(
-            (F.col("doc_a") < F.col("doc_b"))
-            # -1e-9: the filter may only LOOSEN (extra candidates are
-            # re-verified exactly below); without it 100*0.07 >
-            # 7 excludes a pair whose true Jaccard equals the threshold
-            & (F.col("_nb") * threshold - F.lit(1e-9) <= F.col("_na"))
-            & (F.col("_na") * threshold - F.lit(1e-9) <= F.col("_nb"))
-        )
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(inter / (F.col("_na") + F.col("_nb") - inter), 6).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
-
-
-def _gram_arrays(df: DataFrame, cols: list[str], text_col: str, k: int) -> DataFrame:
-    """Per-doc sorted array of xxhash64'd distinct grams + set size
-    (map-side only; hashing before the pair join makes every downstream
-    comparison a long compare).  Grams come from
-    :func:`..functions.textfn.gram_array` — THE one gram constructor —
-    not a re-implementation (r7 review: this body had duplicated it
-    verbatim, the exact silent-divergence hazard that helper exists to
-    prevent)."""
-    from ..functions.textfn import gram_array
-
-    toks = tokenize(text_col)
-    # single-split sources run the gram hashing on one core; no-op when
-    # the scan is already parallel (r12 opt)
-    df = fan_out(df)
-    return (
-        df.select(*cols, toks.alias("_toks"))
-        .filter(F.size("_toks") >= k)
-        .select(
-            *cols,
-            F.array_sort(
-                F.transform(
-                    F.array_distinct(gram_array(F.col("_toks"), k)),
-                    lambda g: F.xxhash64(g),
-                )
-            ).alias("grams"),
-        )
-        .withColumn("n_grams", F.size("grams"))
-    )
-
-
-def ngram_jaccard_pairs_prefix(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    block_col: str | None = "lang",
-    k: int = 2,
-    threshold: float = 0.5,
-    max_bucket: int | None = MAX_BUCKET,
-    on_overflow: str = "drop",
-) -> DataFrame:
-    """Prefix-filtered exact Jaccard join (AllPairs/PPJoin-style) — the
-    scale path for LARGE-VOCAB corpora where no blocking key bounds pair
-    counts.
-
-    Sort each doc's gram set by (global frequency, gram); for Jaccard >=
-    t a qualifying pair must share at least one gram within the first
-    ``n - ceil(t*n) + 1`` grams of each doc, so candidates are generated
-    only from those rare-gram prefixes and verified exactly with
-    ``array_intersect``.  Join buckets are bounded by rare-gram
-    frequency for LONG docs — but short docs' prefixes cover their whole
-    gram set, hot boilerplate grams included, so the candidate join is
-    NOT self-bounding (a 10⁶-doc boilerplate bigram in 3-token docs is a
-    ~10¹¹-row join).  ``max_bucket`` therefore caps prefix-gram
-    frequency exactly like the LSH mega-bucket guard: oversized grams
-    drop with accounting on the returned frame's ``bucket_overflow``
-    attribute (dropped hot-prefix grams CAN lose qualifying pairs — the
-    same documented degrade-don't-die contract as every sibling), or
-    fail loudly with ``on_overflow='error'`` (the exact-oracle mode).
-    (On tiny-vocab corpora every doc shares its prefix with most others
-    and this degrades to all-pairs plus overhead — use the blocked form
-    there.)
-
-    Rows with a NULL ``block_col`` are EXCLUDED by declaration, like
-    the blocked variant (r7 review — the candidate join's plain
-    equality silently dropped them anyway; now it is stated and
-    filtered up front)."""
-    cols = [id_col] + ([block_col] if block_col else [])
-    base = df.filter(F.col(block_col).isNotNull()) if block_col else df
-    g = shingles(base.select(*cols, text_col), text_col, k=k, out="gram")
-
-    freq = g.groupBy("gram").agg(F.count("*").alias("_f"))
-    docs = (
-        g.join(freq, "gram")
-        .groupBy(*cols)
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("_f", "gram"))),
-                lambda s: s["gram"],
-            ).alias("grams")
-        )
-        .withColumn("n_grams", F.size("grams"))
-        # prefix length n - ceil(t*n) + 1.  The epsilon guards binary-
-        # double slop in t*n (0.07*100 evaluates to 7.000000000000001;
-        # a bare ceil gives 8 and shortens the prefix by one).  This
-        # n-ceil(t*n)+1 form is already LOOSER than the tight Jaccard
-        # bound n-ceil(t/(1+t)*(na+nb))+1, so the one-gram loss is
-        # normally absorbed by that slack — the epsilon removes the
-        # dependence on it entirely, and can only err toward a LONGER
-        # prefix (extra candidates, still exact after verification).
-        .withColumn(
-            "_plen",
-            F.col("n_grams")
-            - F.ceil(
-                F.lit(float(threshold)) * F.col("n_grams") - F.lit(1e-9)
-            )
-            + 1,
-        )
-    )
-
-    # docs feeds the prefix explode AND both verification legs, pref
-    # feeds both candidate-join sides — one lazy lineage cut each, the
-    # same multi-consumer discipline as edit_distance/containment (r7
-    # review: without the cuts the shingle+freq+sort pipeline re-ran
-    # ~4x, roughly quadrupling the operator's dominant stage)
-    docs = docs.localCheckpoint(eager=False)
-    pref = docs.select(
-        *cols, F.explode(F.slice("grams", 1, F.col("_plen").cast("int"))).alias("gram")
-    )
-    overflow_stats = None
-    if max_bucket is not None:
-        # the shared mega-bucket contract, sized by the precomputed
-        # prefix-gram count instead of a collect_list (r7 review: this
-        # block used to re-implement _cap_buckets inline)
-        pf = pref.groupBy("gram").agg(F.count("*").alias("_pf"))
-        kept, overflow_stats = _cap_buckets(
-            pf, None, max_bucket, on_overflow,
-            size_col=F.col("_pf"), what="prefix gram",
-        )
-        pref = pref.join(kept.select("gram"), "gram", "left_semi")
-    pref = pref.localCheckpoint(eager=False)
-    a, b = pref.alias("a"), pref.alias("b")
-    cond = (F.col("a.gram") == F.col("b.gram")) & (
-        F.col(f"a.{id_col}") < F.col(f"b.{id_col}")
-    )
-    if block_col:
-        cond = cond & (F.col(f"a.{block_col}") == F.col(f"b.{block_col}"))
-    cand = (
-        a.join(b, cond)
-        .select(
-            F.col(f"a.{id_col}").alias("doc_a"), F.col(f"b.{id_col}").alias("doc_b")
-        )
-        .distinct()
-    )
-
-    da = docs.select(
-        F.col(id_col).alias("doc_a"),
-        F.col("grams").alias("_ga"),
-        F.col("n_grams").alias("_na"),
-    )
-    db = docs.select(
-        F.col(id_col).alias("doc_b"),
-        F.col("grams").alias("_gb"),
-        F.col("n_grams").alias("_nb"),
-    )
-    inter = F.size(F.array_intersect("_ga", "_gb"))
-    out = (
-        cand.join(da, "doc_a")
-        .join(db, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(inter / (F.col("_na") + F.col("_nb") - inter), 6).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
-    out.bucket_overflow = overflow_stats
-    return out
 
 
 # --------------------------------------------------------------------------

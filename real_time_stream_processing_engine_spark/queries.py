@@ -12145,6 +12145,9 @@ def q230_sequence_patterns(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("m_loop"),
     )
+    # a global aggregate emits one row even over no sessions; the
+    # crossJoin form (and the oracle) emit none
+    agg = agg.filter(F.col("n_sessions") > 0)
     hits = agg.select(
         F.explode(
             F.array(

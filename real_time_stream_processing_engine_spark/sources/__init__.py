@@ -5,7 +5,6 @@ from .readers import (  # noqa: F401
     load_table,
     parquet_ts_unit,
     read_schema_for,
-    load_tables,
     read_text_lines,
     read_traffic_signs_csv,
 )

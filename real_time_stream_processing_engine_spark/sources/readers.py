@@ -287,10 +287,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return convert_ts_cols(df, conv)
 
 
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> tuple[DataFrame, ...]:
-    return tuple(load_table(spark, sf_dir, n) for n in names)
-
-
 def register_tables(spark: SparkSession, sf_dir: str) -> list[str]:
     """Register every testdata table present in ``sf_dir`` as a temp
     view (unit-corrected schemas included), making the whole engine
@@ -419,24 +415,3 @@ def read_orc(
     if schema is not None:
         r = r.schema(schema)
     return r.orc(path)
-
-
-def read_avro(spark: SparkSession, path: str) -> DataFrame:
-    """Avro source — ENV-GATED like the Kafka connector: the
-    spark-avro module is an external jar not present in this
-    container.  The moment it lands on the classpath this works
-    unchanged; until then the error says exactly what to deploy."""
-    try:
-        return spark.read.format("avro").load(path)
-    except Exception as e:  # pragma: no cover - environment-dependent
-        # translate ONLY the missing-connector case; a wrong path or a
-        # corrupt file must surface as itself, not as a deploy-the-jar
-        # instruction when the jar is already present (r5 review catch)
-        msg = str(e)
-        if "DATA_SOURCE_NOT_FOUND" in msg or "Failed to find" in msg or "ClassNotFound" in msg:
-            raise RuntimeError(
-                "Avro needs the spark-avro package on the classpath "
-                "(--packages org.apache.spark:spark-avro_2.13:<spark-version>); "
-                f"underlying error: {e}"
-            ) from e
-        raise

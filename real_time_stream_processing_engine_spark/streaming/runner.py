@@ -18,6 +18,7 @@ import shutil
 import tempfile
 import uuid
 import warnings
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -208,16 +209,17 @@ def _env_max_files_per_trigger() -> int | None:
 
 
 def _staged_events_stream(spark: SparkSession, d: str, src_path: str,
-                          default_max_files: int | None = 1) -> DataFrame:
-    """Shared reader setup for every staged-events file stream (the
-    dedup/CDC/count-min/binned/bitmap paths): unit-sniffed schema + ts
-    conversion (never diverging from batch reads) and
-    maxFilesPerTrigger — the SPARK_GRAFT_STREAM_MAX_FILES harness
-    override first, the caller's default otherwise.  Factored so a
-    reader-setup change cannot silently reach only some of the five
-    call sites (reviewed r5)."""
+                          default_max_files: int | None = 1,
+                          max_files: int | None = None) -> DataFrame:
+    """Shared reader setup for every events file stream (stream_events
+    and the dedup/CDC/count-min/binned/bitmap paths): unit-sniffed
+    schema + ts conversion (never diverging from batch reads) and
+    maxFilesPerTrigger — the caller's explicit ``max_files`` first,
+    then the SPARK_GRAFT_STREAM_MAX_FILES harness override, then the
+    caller's default.  Factored so a reader-setup change cannot
+    silently reach only some of the call sites (reviewed r5)."""
     schema, conv = read_schema_for("events", src_path)
-    mft = _env_max_files_per_trigger()
+    mft = max_files if max_files is not None else _env_max_files_per_trigger()
     if mft is None:
         mft = default_max_files
     # maxFileAge defaults to 7d: on a long-running stream a backfill
@@ -235,18 +237,10 @@ def stream_events(spark: SparkSession, sf_dir: str, max_files_per_trigger: int |
     stream, E1).  ``maxFilesPerTrigger`` is the backpressure knob the
     reference lacks (busy-wait blast, ``RainStorm.java:1292-1296``)."""
     path = os.path.join(sf_dir, "events.parquet")
-    # unit-sniffed schema + conversion SHARED with load_table, so batch
-    # and stream reads can never diverge on the timestamp unit
-    schema, conv = read_schema_for("events", path)
-    # maxFileAge: see _staged_events_stream — the 7d default silently
-    # skips old-mtime backfills on long-running streams
-    reader = spark.readStream.schema(schema).option("maxFileAge", "36500d")
-    if max_files_per_trigger is None:
-        max_files_per_trigger = _env_max_files_per_trigger()
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    df = reader.parquet(_as_stream_dir(path))
-    return convert_ts_cols(df, conv)
+    return _staged_events_stream(
+        spark, _as_stream_dir(path), path,
+        default_max_files=None, max_files=max_files_per_trigger,
+    )
 
 
 def stream_rate(spark: SparkSession, rows_per_second: int = 10) -> DataFrame:
@@ -619,6 +613,167 @@ def stream_stateful_running_count(spark: SparkSession, sf_dir: str) -> DataFrame
     return spark_df.groupBy("event_type").agg(F.max("cnt").alias("cnt"))
 
 
+# ---------------------------------------------------------------------------
+# Maintained tables: foreachBatch sinks with exactly-once effects
+# ---------------------------------------------------------------------------
+
+_LEDGER_COLS = ("last_batch", "last_ckpt")
+
+
+def _norm_ckpt(path: str) -> str:
+    """Canonical spelling of a checkpoint path for ledger identity:
+    strip the file: scheme (any of Hadoop's spellings — `file:/p`,
+    `file://p`, `file:///p`), trailing slashes, and (local paths only)
+    resolve symlinks — so `file:///tmp/ck/`, `file:/tmp/ck`, `/tmp/ck`,
+    and a symlinked scratch spelling of the same checkpoint compare
+    equal instead of falsely refusing a legitimate same-checkpoint
+    resume (r7+r8 advice: the single-slash `file:/tmp/ck` canonical
+    form has no `://`, so the old `file://`-only strip let it fall
+    through to realpath, which joined it onto the cwd).
+    Non-local URIs (hdfs://, s3a://) only lose trailing slashes —
+    realpath would mangle them.  The scheme strip is the shared
+    :func:`sources.fsmeta.strip_file_scheme` (r9: one normalizer for
+    every driver-local path consumer)."""
+    from ..sources.fsmeta import strip_file_scheme
+
+    p = strip_file_scheme(path)
+    if "://" in p:
+        return p.rstrip("/")
+    return os.path.realpath(p)
+
+
+def _check_ledger_ckpt(recorded: str | None, ckpt: str, target_path: str) -> None:
+    """foreachBatch batch ids are CHECKPOINT-LOCAL: a maintained table
+    whose ledger was written from a different checkpoint cannot be
+    safely continued (new ids restart at 0 <= the old ledger, so every
+    batch silently skips — or double-applies if the old run was
+    shorter).  Refuse loudly instead (r7 review).  Both sides compare
+    NORMALIZED (`_norm_ckpt`) so equivalent spellings of one
+    checkpoint — trailing slash, file:// URI, symlinked scratch — do
+    not refuse a legitimate resume."""
+    if recorded is not None and _norm_ckpt(recorded) != _norm_ckpt(ckpt):
+        raise RuntimeError(
+            f"maintained table {target_path!r} was last written from "
+            f"checkpoint {recorded!r}, but this stream runs from "
+            f"{ckpt!r}: batch ids are checkpoint-local, so continuing "
+            "would silently skip or double-apply batches. Pass the "
+            "original checkpoint to resume, or a fresh target_path."
+        )
+
+
+def _maintain_table(
+    spark: SparkSession,
+    sf_dir: str,
+    tag: str,
+    merge: Callable[[DataFrame | None, DataFrame], DataFrame],
+    *,
+    target_path: str | None,
+    checkpoint: str | None,
+    ledger: bool,
+    fail_after_batches: int | None = None,
+    copies: tuple[str, ...] = ("events",),
+    seed: Callable[[], DataFrame] | None = None,
+) -> DataFrame:
+    """The exactly-once maintained-table protocol behind every
+    ``foreachBatch`` sink (q69 CDC, q105 count-min, q162 binned counts,
+    q171 bitmap DAU), written once so a fix to replay skip,
+    foreign-checkpoint refusal, swap recovery or checkpoint reclaim
+    reaches every sink.  The sink supplies only ``merge(prev, batch)``:
+    the new target from the current one (``None`` before the first
+    write) and one micro-batch.
+
+    - Source: the events table staged once per name in ``copies``
+      (two copies = every tuple redelivered, the reference's retry
+      storm ``Node.java:1547-1564``), one file per micro-batch.
+    - ``target_path``/``checkpoint`` default to fresh scratch dirs
+      (``rs_<tag>_target_u<uid>_…`` / ``rs_ckpt_rs_<tag>_…``); pass
+      both explicitly to RESUME an interrupted run from its checkpoint.
+    - ``recover_swap`` first: a crash inside ``replace_contents``'
+      rename window leaves the target briefly missing but recoverable
+      from its swap siblings — seeding or starting empty in that state
+      would silently drop every batch the checkpoint already marked
+      committed.  ``seed`` is written only to a truly fresh target,
+      through the same atomic swap as every batch (a plain write could
+      crash mid-commit and leave a partial dir that recover_swap would
+      then treat as complete).
+    - Each batch reads the target, merges, and swaps the result in
+      atomically (``catalog.replace_contents``).
+    - ``ledger`` (additive merges, where a replay would double-count):
+      the last applied batch id and its checkpoint ride IN the target
+      rows, swapped with the data; a replayed id <= the ledger is
+      skipped whole, and a ledger written from another checkpoint is
+      refused (:func:`_check_ledger_ckpt`).  Idempotent merges (CDC's
+      version gate, bitmap OR) need none.
+    - ``fail_after_batches`` is the crash-injection hook: the sink
+      raises after N applied batches, like an executor/driver loss
+      mid-stream, and the error propagates to the caller, who restarts
+      from the same checkpoint + target.
+    - A default checkpoint is reclaimed after a clean drain: its fresh
+      uuid makes it unresumable, and bench loops used to leak one per
+      run on tmpfs (r7 review).  The target stays — it IS the table
+      the returned frame reads (ledger columns dropped)."""
+    from ..sources.catalog import recover_swap, replace_contents
+
+    src_path = os.path.join(sf_dir, "events.parquet")
+    links: dict[str, str] = {}
+    for name in copies:
+        links.update(_expand_links(name, src_path))
+    d = _stage_symlink_dir(f"{tag}dir", links)
+    if target_path is None:
+        target_path = os.path.join(
+            _scratch_dir(), f"rs_{tag}_target_u{os.getuid()}_{uuid.uuid4().hex[:8]}"
+        )
+    if not recover_swap(spark, target_path) and seed is not None:
+        replace_contents(seed(), target_path)
+    ckpt = checkpoint or os.path.join(
+        _scratch_dir(), f"rs_ckpt_rs_{tag}_{uuid.uuid4().hex[:8]}"
+    )
+
+    n_applied = 0
+
+    def apply_batch(batch: DataFrame, batch_id: int) -> None:
+        nonlocal n_applied
+        if fail_after_batches is not None and n_applied >= fail_after_batches:
+            raise RuntimeError("injected sink crash (fail_after_batches)")
+        s = batch.sparkSession
+        # Only the first-batch missing-target case may start from None;
+        # any other read failure propagates so the checkpoint retries
+        # the batch instead of silently resetting the table to one
+        # batch's worth.
+        prev = (
+            s.read.parquet(target_path)
+            if hadoop_path_exists(s, target_path) else None
+        )
+        if ledger and prev is not None:
+            head = prev.select(
+                F.max("last_batch").alias("b"), F.max("last_ckpt").alias("c")
+            ).head()
+            _check_ledger_ckpt(head.c, ckpt, target_path)
+            if head.b is not None and batch_id <= head.b:
+                return  # replayed batch: the ledger makes it a no-op
+            prev = prev.drop(*_LEDGER_COLS)
+        merged = merge(prev, batch)
+        if ledger:
+            merged = merged.withColumn("last_batch", F.lit(batch_id)).withColumn(
+                "last_ckpt", F.lit(_norm_ckpt(ckpt))
+            )
+        replace_contents(merged, target_path)
+        n_applied += 1
+
+    q = (
+        _staged_events_stream(spark, d, src_path)
+        .writeStream.foreachBatch(apply_batch)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    if checkpoint is None:
+        shutil.rmtree(ckpt, ignore_errors=True)
+    out = spark.read.parquet(target_path)
+    return out.drop(*_LEDGER_COLS) if ledger else out
+
+
 def stream_cdc_upsert(
     spark: SparkSession,
     sf_dir: str,
@@ -632,65 +787,34 @@ def stream_cdc_upsert(
     The source stages the SAME events file twice with
     ``maxFilesPerTrigger=1`` — every tuple arrives in (at least) two
     micro-batches, the reference's retry-storm delivery
-    (``Node.java:1547-1564``).  Each batch: latest-wins rank within
-    the batch, then :func:`..operators.cdc.apply_upsert_versioned`
-    into a parquet target (read-modify-write behind an atomic swap,
-    ``catalog.replace_contents``).  The STRICTLY-newer version gate
-    makes the redelivered batch a no-op, so the final target equals
-    the batch answer (q67's mapping + version ledger) no matter the
-    batch count or order — sink-side dedup with a durable ledger,
-    where q30 dedups in the state store instead.
+    (``Node.java:1547-1564``).  The target is seeded with the customer
+    dim; each batch: latest-wins rank within the batch, then
+    :func:`..operators.cdc.apply_upsert_versioned` into the target.
+    The STRICTLY-newer version gate makes the redelivered batch a
+    no-op, so the final target equals the batch answer (q67's mapping
+    + version ledger) no matter the batch count or order — sink-side
+    dedup with a durable ledger, where q30 dedups in the state store
+    instead; no batch-id ledger is needed.
 
-    ``target_path``/``checkpoint`` default to fresh scratch dirs; pass
-    both explicitly to RESUME an interrupted run — the checkpoint
-    replays unfinished batches, and the version gate makes any batch
-    that already half-applied idempotent.  ``fail_after_batches`` is
-    the crash-injection hook for that test: the foreachBatch sink
-    raises after N batches, exactly like an executor/driver loss
-    mid-stream."""
-    from ..operators.cdc import apply_upsert_versioned
-    from ..sources.catalog import recover_swap, replace_contents
-    from ..sources.readers import load_table
-
-    src_path = os.path.join(sf_dir, "events.parquet")
-    d = _stage_symlink_dir(
-        "cdcdir",
-        {**_expand_links("events_a", src_path), **_expand_links("events_b", src_path)},
-    )
-    if target_path is None:
-        target_path = os.path.join(
-            _scratch_dir(), f"rs_cdc_target_u{os.getuid()}_{uuid.uuid4().hex[:8]}"
-        )
-    # recover_swap first: a crash inside replace_contents' rename window
-    # leaves the target briefly missing but fully recoverable from its
-    # swap siblings — reseeding in that state would silently drop every
-    # batch the checkpoint already marked committed.
-    if not recover_swap(spark, target_path):  # truly fresh: seed the dim
-        # seed through the SAME atomic swap as every batch write — a
-        # plain write.parquet could crash mid-commit and leave a
-        # partial dir that recover_swap's existence check would then
-        # treat as a complete table on restart (reviewed r5)
-        replace_contents(
-            load_table(spark, sf_dir, "customer").select(
-                "c_custkey",
-                "c_name",
-                "c_acctbal",
-                F.lit(None).cast("timestamp").alias("ver_ts"),
-                F.lit(None).cast("long").alias("ver_event_id"),
-            ),
-            target_path,
-        )
-
+    ``target_path``/``checkpoint``/``fail_after_batches``: see
+    :func:`_maintain_table` — on resume the checkpoint replays
+    unfinished batches, and the version gate makes any batch that
+    already half-applied idempotent."""
     from pyspark.sql import Window
 
-    n_applied = {"n": 0}
+    from ..operators.cdc import apply_upsert_versioned
+    from ..sources.readers import load_table
 
-    def apply_batch(batch: DataFrame, batch_id: int) -> None:
-        if (
-            fail_after_batches is not None
-            and n_applied["n"] >= fail_after_batches
-        ):
-            raise RuntimeError("injected sink crash (fail_after_batches)")
+    def seed() -> DataFrame:
+        return load_table(spark, sf_dir, "customer").select(
+            "c_custkey",
+            "c_name",
+            "c_acctbal",
+            F.lit(None).cast("timestamp").alias("ver_ts"),
+            F.lit(None).cast("long").alias("ver_event_id"),
+        )
+
+    def merge(prev: DataFrame | None, batch: DataFrame) -> DataFrame:
         w = Window.partitionBy("user_id").orderBy(
             F.desc("ts"), F.desc("event_id")
         )
@@ -708,49 +832,148 @@ def stream_cdc_upsert(
                 "event_id",
             )
         )
-        merged = apply_upsert_versioned(
-            batch.sparkSession.read.parquet(target_path),
+        return apply_upsert_versioned(
+            prev,
             updates,
             key_cols=["c_custkey"],
             set_cols={"c_acctbal": "new_bal"},
             version_cols={"ver_ts": "ts", "ver_event_id": "event_id"},
             insert_only_cols={"c_name": "new_name"},
         )
-        replace_contents(merged, target_path)
-        n_applied["n"] += 1
 
-    src = _staged_events_stream(spark, d, src_path)
-    default_ckpt = checkpoint is None
-    ckpt = checkpoint or os.path.join(
-        _scratch_dir(), f"rs_ckpt_rs_cdc_{uuid.uuid4().hex[:8]}"
+    final = _maintain_table(
+        spark, sf_dir, "cdc", merge,
+        target_path=target_path, checkpoint=checkpoint, ledger=False,
+        fail_after_batches=fail_after_batches,
+        copies=("events_a", "events_b"), seed=seed,
     )
-    q = (
-        src.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    except Exception as e:
-        # suppress ONLY the injected crash (the caller restarts from
-        # the same checkpoint + target to prove recovery); a genuine
-        # failure in the merge path must not masquerade as one
-        if fail_after_batches is None or "injected sink crash" not in str(e):
-            raise
-    if default_ckpt and fail_after_batches is None:
-        # fresh-uuid checkpoint after a clean drain: unresumable by
-        # construction — reclaim the tmpfs logs (r7 review: q69 bench
-        # loops leaked one per run).  The target stays: it IS the
-        # maintained table the returned frame reads.
-        shutil.rmtree(ckpt, ignore_errors=True)
-    final = spark.read.parquet(target_path)
     return final.select(
         "c_custkey",
         "c_name",
         "c_acctbal",
         F.unix_micros("ver_ts").alias("ver_ts_us"),
         "ver_event_id",
+    )
+
+
+def stream_countmin(
+    spark: SparkSession,
+    sf_dir: str,
+    item_col: str = "user_id",
+    target_path: str | None = None,
+    checkpoint: str | None = None,
+    fail_after_batches: int | None = None,
+) -> DataFrame:
+    """Maintain a count-min sketch OVER A STREAM: each micro-batch
+    builds its own (row, bucket, c) grid and bucket-sum-merges it into
+    a tiny parquet target behind the atomic swap — streaming heavy
+    hitters with constant state regardless of key cardinality (the
+    aggregation-state alternative holds one counter PER KEY).
+
+    Counting is not latest-wins, so redelivered data would double —
+    exactness comes from the batch-id ledger of :func:`_maintain_table`
+    (replayed batches skipped whole, a foreign checkpoint refused).
+    Merge associativity + the ledger give stream-end == batch-sketch
+    EXACT equality (pinned in ``tests/test_streaming_live.py``)."""
+    from ..operators.sketches import countmin_build, countmin_merge
+
+    def merge(prev: DataFrame | None, batch: DataFrame) -> DataFrame:
+        delta = countmin_build(
+            batch.select(F.col(item_col).cast("string").alias("tok"))
+        )
+        return delta if prev is None else countmin_merge(prev, delta)
+
+    return _maintain_table(
+        spark, sf_dir, "cms", merge,
+        target_path=target_path, checkpoint=checkpoint, ledger=True,
+        fail_after_batches=fail_after_batches,
+    )
+
+
+def stream_binned_counts(
+    spark: SparkSession,
+    sf_dir: str,
+    target_path: str | None = None,
+    checkpoint: str | None = None,
+    fail_after_batches: int | None = None,
+) -> DataFrame:
+    """Maintain per-(event_type, value-bin) counts OVER A STREAM with
+    the q105 additive-state recipe: each micro-batch's bin counts
+    merge into a tiny parquet target behind the atomic swap, and the
+    batch-id ledger of :func:`_maintain_table` makes replays
+    whole-batch no-ops — constant state (types x 10 bins), exactly-once
+    without latest-wins semantics.  The maintained table is the input
+    every distribution monitor (PSI drift, q162) reads for free at any
+    moment — the monitoring loop never rescans history."""
+
+    def merge(prev: DataFrame | None, batch: DataFrame) -> DataFrame:
+        delta = (
+            batch.select(
+                "event_type",
+                F.least(F.lit(9), F.floor(F.col("value") / 10.0))
+                .cast("long")
+                .alias("bin"),
+            )
+            .groupBy("event_type", "bin")
+            .agg(F.count("*").alias("n"))
+        )
+        if prev is None:
+            return delta
+        return (
+            prev.unionByName(delta)
+            .groupBy("event_type", "bin")
+            .agg(F.sum("n").alias("n"))
+        )
+
+    return _maintain_table(
+        spark, sf_dir, "psi", merge,
+        target_path=target_path, checkpoint=checkpoint, ledger=True,
+        fail_after_batches=fail_after_batches,
+    )
+
+
+def stream_bitmap_dau(
+    spark: SparkSession,
+    sf_dir: str,
+    target_path: str | None = None,
+    checkpoint: str | None = None,
+) -> DataFrame:
+    """Maintain EXACT daily distinct users over a stream as (day, word,
+    bits) bitmaps: each micro-batch's bitmap OR-merges into the target.
+
+    The instructive contrast with q105/q162's additive recipe: bitmap
+    OR is IDEMPOTENT — a replayed batch ORs in bits that are already
+    set and changes nothing — so exactly-once needs NO batch-id
+    ledger; the merge's algebra alone absorbs redelivery (the same
+    reason q69's latest-wins CDC needs none).  State is
+    days x |id-space|/64 words regardless of event volume, and the
+    DAU readout is a popcount sum off the maintained table."""
+
+    def merge(prev: DataFrame | None, batch: DataFrame) -> DataFrame:
+        delta = (
+            batch.select(
+                F.floor(F.unix_timestamp("ts") / F.lit(86400))
+                .cast("long")
+                .alias("day"),
+                F.expr("user_id div 64").alias("w"),
+                F.expr("shiftleft(1L, cast(user_id % 64 AS INT))").alias(
+                    "bit"
+                ),
+            )
+            .groupBy("day", "w")
+            .agg(F.bit_or("bit").alias("bits"))
+        )
+        if prev is None:
+            return delta
+        return (
+            prev.unionByName(delta)
+            .groupBy("day", "w")
+            .agg(F.bit_or("bits").alias("bits"))
+        )
+
+    return _maintain_table(
+        spark, sf_dir, "dau", merge,
+        target_path=target_path, checkpoint=checkpoint, ledger=False,
     )
 
 
@@ -932,217 +1155,6 @@ def _click_purchase_interval_join(
     return run_to_memory_available_now(joined, output_mode="append")
 
 
-def _norm_ckpt(path: str) -> str:
-    """Canonical spelling of a checkpoint path for ledger identity:
-    strip the file: scheme (any of Hadoop's spellings — `file:/p`,
-    `file://p`, `file:///p`), trailing slashes, and (local paths only)
-    resolve symlinks — so `file:///tmp/ck/`, `file:/tmp/ck`, `/tmp/ck`,
-    and a symlinked scratch spelling of the same checkpoint compare
-    equal instead of falsely refusing a legitimate same-checkpoint
-    resume (r7+r8 advice: the single-slash `file:/tmp/ck` canonical
-    form has no `://`, so the old `file://`-only strip let it fall
-    through to realpath, which joined it onto the cwd).
-    Non-local URIs (hdfs://, s3a://) only lose trailing slashes —
-    realpath would mangle them.  The scheme strip is the shared
-    :func:`sources.fsmeta.strip_file_scheme` (r9: one normalizer for
-    every driver-local path consumer)."""
-    from ..sources.fsmeta import strip_file_scheme
-
-    p = strip_file_scheme(path)
-    if "://" in p:
-        return p.rstrip("/")
-    return os.path.realpath(p)
-
-
-def _check_ledger_ckpt(recorded: str | None, ckpt: str, target_path: str) -> None:
-    """foreachBatch batch ids are CHECKPOINT-LOCAL: a maintained table
-    whose ledger was written from a different checkpoint cannot be
-    safely continued (new ids restart at 0 <= the old ledger, so every
-    batch silently skips — or double-applies if the old run was
-    shorter).  Refuse loudly instead (r7 review).  Both sides compare
-    NORMALIZED (`_norm_ckpt`) so equivalent spellings of one
-    checkpoint — trailing slash, file:// URI, symlinked scratch — do
-    not refuse a legitimate resume."""
-    if recorded is not None and _norm_ckpt(recorded) != _norm_ckpt(ckpt):
-        raise RuntimeError(
-            f"maintained table {target_path!r} was last written from "
-            f"checkpoint {recorded!r}, but this stream runs from "
-            f"{ckpt!r}: batch ids are checkpoint-local, so continuing "
-            "would silently skip or double-apply batches. Pass the "
-            "original checkpoint to resume, or a fresh target_path."
-        )
-
-
-def stream_countmin(
-    spark: SparkSession,
-    sf_dir: str,
-    item_col: str = "user_id",
-    target_path: str | None = None,
-    checkpoint: str | None = None,
-    fail_after_batches: int | None = None,
-) -> DataFrame:
-    """Maintain a count-min sketch OVER A STREAM: each micro-batch
-    builds its own (row, bucket, c) grid and bucket-sum-merges it into
-    a tiny parquet target behind the atomic swap — streaming heavy
-    hitters with constant state regardless of key cardinality (the
-    aggregation-state alternative holds one counter PER KEY).
-
-    Counting is not latest-wins, so redelivered data would double —
-    exactness comes from a batch-id ledger RIDING IN the sketch rows
-    (``last_batch`` column, swapped atomically with the counts): a
-    replayed foreachBatch id <= the ledger is skipped whole.  Batch
-    ids are CHECKPOINT-LOCAL, so the ledger also records which
-    checkpoint produced it (``last_ckpt``) and refuses a target/
-    checkpoint mismatch loudly — reusing a maintained target with a
-    fresh checkpoint would otherwise silently skip every new batch
-    (ids restart at 0 <= ledger) or double-count (r7 review).  Merge
-    associativity + the ledger give stream-end == batch-sketch EXACT
-    equality (pinned in ``tests/test_streaming_live.py``)."""
-    from ..operators.sketches import countmin_build, countmin_merge
-    from ..sources.catalog import recover_swap, replace_contents
-
-    src_path = os.path.join(sf_dir, "events.parquet")
-    d = _stage_symlink_dir("cmsdir", _expand_links("events", src_path))
-    if target_path is None:
-        target_path = os.path.join(
-            _scratch_dir(), f"rs_cms_target_u{os.getuid()}_{uuid.uuid4().hex[:8]}"
-        )
-    recover_swap(spark, target_path)
-    default_ckpt = checkpoint is None
-    ckpt = checkpoint or os.path.join(
-        _scratch_dir(), f"rs_ckpt_rs_cms_{uuid.uuid4().hex[:8]}"
-    )
-
-    n_applied = {"n": 0}
-
-    def apply_batch(batch: DataFrame, batch_id: int) -> None:
-        if (
-            fail_after_batches is not None
-            and n_applied["n"] >= fail_after_batches
-        ):
-            raise RuntimeError("injected sink crash (fail_after_batches)")
-        s = batch.sparkSession
-        items = batch.select(F.col(item_col).cast("string").alias("tok"))
-        delta = countmin_build(items)
-        # Only the first-batch missing-target case may seed from the
-        # delta (same contract as stream_binned_counts): any other
-        # read failure propagates so the checkpoint retries instead of
-        # silently resetting the sketch to one batch's counts.
-        if not hadoop_path_exists(s, target_path):
-            merged = delta
-        else:
-            prev = s.read.parquet(target_path)
-            head = prev.select(
-                F.max("last_batch").alias("b"), F.max("last_ckpt").alias("c")
-            ).head()
-            _check_ledger_ckpt(head.c, ckpt, target_path)
-            if head.b is not None and batch_id <= head.b:
-                return  # replayed batch: the ledger makes it a no-op
-            merged = countmin_merge(
-                prev.drop("last_batch", "last_ckpt"), delta
-            )
-        replace_contents(
-            merged.withColumn("last_batch", F.lit(batch_id)).withColumn(
-                "last_ckpt", F.lit(_norm_ckpt(ckpt))
-            ),
-            target_path,
-        )
-        n_applied["n"] += 1
-
-    src = _staged_events_stream(spark, d, src_path)
-    q = (
-        src.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    if default_ckpt and fail_after_batches is None:
-        # fresh-uuid checkpoint: nothing can resume from it; reclaim
-        # the tmpfs state/offset logs (r7 review: bench loops leaked)
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.read.parquet(target_path).drop("last_batch", "last_ckpt")
-
-
-def stream_lifetime_stats_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user lifetime stats via ``transformWithStateInPandas`` — the
-    MODERN custom-state API (Spark 4 StatefulProcessor: typed state
-    handles, TTL, timers, RocksDB-only) beside q32's classic
-    ``applyInPandasWithState``.  ValueState holds (n, sum) per user;
-    each micro-batch emits the updated totals (update semantics), and
-    the final answer per user is the row with the maximal monotone
-    count — which equals the batch groupBy (the oracle).
-
-    transformWithState requires the RocksDB state store, so this query
-    pins the provider for its own drain regardless of the session
-    default (the in-heap default stays for everything else)."""
-    try:  # transformWithState speaks protobuf to the JVM driver worker
-        from google.protobuf import descriptor  # noqa: F401
-    except Exception as e:
-        raise RuntimeError(
-            "transformWithStateInPandas requires the google.protobuf "
-            "runtime, which this environment does not provide (same "
-            "env-gated posture as the Kafka connector); q32's "
-            "applyInPandasWithState path covers custom state without it."
-        ) from e
-    import pandas as pd
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    class LifetimeStats(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._agg = handle.getValueState("agg", "n long, s double")
-
-        def handleInputRows(self, key, rows, timerValues):
-            prev = self._agg.get()
-            n, s = (prev[0], prev[1]) if prev else (0, 0.0)
-            for pdf in rows:
-                n += len(pdf)
-                s += float(pdf["value"].sum())
-            self._agg.update((n, s))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n], "sum_value": [s]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    src = stream_events(spark, sf_dir)
-    out = src.groupBy("user_id").transformWithStateInPandas(
-        LifetimeStats(),
-        outputStructType="user_id long, n_events long, sum_value double",
-        outputMode="Update",
-        timeMode="None",
-    )
-    prev_provider = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
-    )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        drained = run_to_memory_available_now(out, output_mode="update")
-    finally:
-        if prev_provider is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev_provider
-            )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
-    return (
-        drained.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") == 1)
-        .select(
-            "user_id",
-            "n_events",
-            F.round("sum_value", 2).alias("sum_value"),
-        )
-    )
-
-
 def stream_sliding_wau(spark: SparkSession, sf_dir: str) -> DataFrame:
     """7-day sliding distinct users (the WAU curve) ON THE STREAM —
     q126's cover-expansion made continuous, and the repo's first
@@ -1202,169 +1214,3 @@ def sliding_wau_pipeline(src: DataFrame) -> DataFrame:
             F.col("wau").cast("long").alias("wau"),
         )
     )
-
-
-def stream_binned_counts(
-    spark: SparkSession,
-    sf_dir: str,
-    target_path: str | None = None,
-    checkpoint: str | None = None,
-    fail_after_batches: int | None = None,
-) -> DataFrame:
-    """Maintain per-(event_type, value-bin) counts OVER A STREAM with
-    the q105 additive-state recipe: each micro-batch's bin counts
-    merge into a tiny parquet target behind the atomic swap, a
-    batch-id ledger riding in the rows makes replays whole-batch
-    no-ops — constant state (types x 10 bins), exactly-once without
-    latest-wins semantics.  The ledger records its checkpoint
-    (``last_ckpt``) and a target/checkpoint mismatch refuses loudly —
-    batch ids are checkpoint-local (r7 review, same gate as
-    stream_countmin).  The maintained table is the input every
-    distribution monitor (PSI drift, q162) reads for free at any
-    moment — the monitoring loop never rescans history."""
-    from ..sources.catalog import recover_swap, replace_contents
-
-    src_path = os.path.join(sf_dir, "events.parquet")
-    d = _stage_symlink_dir("psidir", _expand_links("events", src_path))
-    if target_path is None:
-        target_path = os.path.join(
-            _scratch_dir(), f"rs_psi_target_u{os.getuid()}_{uuid.uuid4().hex[:8]}"
-        )
-    recover_swap(spark, target_path)
-    default_ckpt = checkpoint is None
-    ckpt = checkpoint or os.path.join(
-        _scratch_dir(), f"rs_ckpt_rs_psi_{uuid.uuid4().hex[:8]}"
-    )
-
-    n_applied = {"n": 0}
-
-    def apply_batch(batch: DataFrame, batch_id: int) -> None:
-        if (
-            fail_after_batches is not None
-            and n_applied["n"] >= fail_after_batches
-        ):
-            raise RuntimeError("injected sink crash (fail_after_batches)")
-        s = batch.sparkSession
-        delta = (
-            batch.select(
-                "event_type",
-                F.least(F.lit(9), F.floor(F.col("value") / 10.0))
-                .cast("long")
-                .alias("bin"),
-            )
-            .groupBy("event_type", "bin")
-            .agg(F.count("*").alias("n"))
-        )
-        # Only the first-batch missing-target case may fall back to
-        # merged = delta; any OTHER read failure must propagate so the
-        # checkpoint retries the batch instead of silently discarding
-        # all accumulated state (a transient FS error would otherwise
-        # reset the counts to one batch's worth).
-        if not hadoop_path_exists(s, target_path):
-            merged = delta
-        else:
-            prev = s.read.parquet(target_path)
-            head = prev.select(
-                F.max("last_batch").alias("b"), F.max("last_ckpt").alias("c")
-            ).head()
-            _check_ledger_ckpt(head.c, ckpt, target_path)
-            if head.b is not None and batch_id <= head.b:
-                return
-            merged = (
-                prev.drop("last_batch", "last_ckpt")
-                .unionByName(delta)
-                .groupBy("event_type", "bin")
-                .agg(F.sum("n").alias("n"))
-            )
-        replace_contents(
-            merged.withColumn("last_batch", F.lit(batch_id)).withColumn(
-                "last_ckpt", F.lit(_norm_ckpt(ckpt))
-            ),
-            target_path,
-        )
-        n_applied["n"] += 1
-
-    src = _staged_events_stream(spark, d, src_path)
-    q = (
-        src.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    if default_ckpt and fail_after_batches is None:
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.read.parquet(target_path).drop("last_batch", "last_ckpt")
-
-
-def stream_bitmap_dau(
-    spark: SparkSession,
-    sf_dir: str,
-    target_path: str | None = None,
-    checkpoint: str | None = None,
-) -> DataFrame:
-    """Maintain EXACT daily distinct users over a stream as (day, word,
-    bits) bitmaps: each micro-batch's bitmap OR-merges into the target.
-
-    The instructive contrast with q105/q162's additive recipe: bitmap
-    OR is IDEMPOTENT — a replayed batch ORs in bits that are already
-    set and changes nothing — so exactly-once needs NO batch-id
-    ledger; the merge's algebra alone absorbs redelivery (the same
-    reason q69's latest-wins CDC needs none).  State is
-    days x |id-space|/64 words regardless of event volume, and the
-    DAU readout is a popcount sum off the maintained table."""
-    from ..sources.catalog import recover_swap, replace_contents
-
-    src_path = os.path.join(sf_dir, "events.parquet")
-    d = _stage_symlink_dir("daudir", _expand_links("events", src_path))
-    if target_path is None:
-        target_path = os.path.join(
-            _scratch_dir(), f"rs_dau_target_u{os.getuid()}_{uuid.uuid4().hex[:8]}"
-        )
-    recover_swap(spark, target_path)
-
-    def apply_batch(batch: DataFrame, batch_id: int) -> None:
-        s = batch.sparkSession
-        delta = (
-            batch.select(
-                F.floor(F.unix_timestamp("ts") / F.lit(86400))
-                .cast("long")
-                .alias("day"),
-                F.expr("user_id div 64").alias("w"),
-                F.expr("shiftleft(1L, cast(user_id % 64 AS INT))").alias(
-                    "bit"
-                ),
-            )
-            .groupBy("day", "w")
-            .agg(F.bit_or("bit").alias("bits"))
-        )
-        # First batch only: no target yet.  Other read errors propagate
-        # (see stream_binned_counts) — a swallowed transient failure
-        # here would OR one batch's bits over an empty table and lose
-        # every previously-set bit.
-        if not hadoop_path_exists(s, target_path):
-            merged = delta
-        else:
-            prev = s.read.parquet(target_path)
-            merged = (
-                prev.unionByName(delta)
-                .groupBy("day", "w")
-                .agg(F.bit_or("bits").alias("bits"))
-            )
-        replace_contents(merged, target_path)
-
-    src = _staged_events_stream(spark, d, src_path)
-    default_ckpt = checkpoint is None
-    ckpt = checkpoint or os.path.join(
-        _scratch_dir(), f"rs_ckpt_rs_dau_{uuid.uuid4().hex[:8]}"
-    )
-    q = (
-        src.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    if default_ckpt:
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.read.parquet(target_path)

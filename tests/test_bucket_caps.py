@@ -128,97 +128,13 @@ def test_bad_on_overflow_rejected(degenerate_docs):
 
 
 # ---------------------------------------------------------------------------
-# r5 review batch: the prefix-filtered Jaccard variant (previously
-# untested), the simhash banding guarantee, and exact-dedup NULL keys.
+# r5 review batch: the simhash banding guarantee and exact-dedup NULL keys.
 # ---------------------------------------------------------------------------
 
 from real_time_stream_processing_engine_spark.operators.dedup import (  # noqa: E402
     dedup_against,
     fingerprint,
-    ngram_jaccard_pairs_prefix,
 )
-
-
-@pytest.fixture(scope="module")
-def varied_docs(spark):
-    """A corpus with shared and distinct bigrams, including a doc pair
-    whose only shared gram is deep in the set (prefix-length sensitive)."""
-    rows = [
-        (1, "en", "alpha beta gamma delta epsilon zeta"),
-        (2, "en", "alpha beta gamma delta epsilon eta"),
-        (3, "en", "theta iota kappa lambda mu nu"),
-        (4, "en", "theta iota kappa lambda mu xi"),
-        (5, "en", "omicron pi rho sigma tau upsilon"),
-        (6, "en", "alpha beta gamma phi chi psi"),
-    ]
-    return spark.createDataFrame(rows, "doc_id long, lang string, text string")
-
-
-def test_prefix_jaccard_equals_plain_exact(spark, varied_docs):
-    """The prefix-filtered path is an OPTIMIZATION of the exact join:
-    same threshold, same pairs, same jaccard values as the plain
-    all-shingles operator."""
-    plain = {
-        (r.doc_a, r.doc_b): r.jaccard
-        for r in ngram_jaccard_pairs(
-            varied_docs, k=2, threshold=0.3, max_bucket=None
-        ).collect()
-    }
-    pref = {
-        (r.doc_a, r.doc_b): r.jaccard
-        for r in ngram_jaccard_pairs_prefix(
-            varied_docs, threshold=0.3, max_bucket=None
-        ).collect()
-    }
-    assert pref == plain and plain  # non-empty and identical
-
-
-def test_prefix_length_survives_float_slop(spark):
-    """threshold*n landing just above an integer in binary (0.07*100 =
-    7.000000000000001) pins the ceil boundary case: the prefix path
-    must still equal the plain exact operator.  (The n-ceil(t*n)+1
-    prefix carries slack over the tight Jaccard bound, so the slop is
-    normally absorbed — the epsilon in the operator removes the
-    reliance on that slack; this test freezes the boundary either
-    way.)"""
-    words_a = [f"w{i:03d}" for i in range(101)]
-    words_b = [f"w{i:03d}" for i in range(94)] + [f"x{i}" for i in range(7)]
-    docs = spark.createDataFrame(
-        [(1, "en", " ".join(words_a)), (2, "en", " ".join(words_b))],
-        "doc_id long, lang string, text string",
-    )
-    plain = {
-        (r.doc_a, r.doc_b): r.jaccard
-        for r in ngram_jaccard_pairs(docs, k=2, threshold=0.07, max_bucket=None).collect()
-    }
-    pref = {
-        (r.doc_a, r.doc_b): r.jaccard
-        for r in ngram_jaccard_pairs_prefix(
-            docs, threshold=0.07, max_bucket=None
-        ).collect()
-    }
-    assert pref == plain and plain
-
-
-def test_prefix_jaccard_cap_accounts_hot_gram(spark, degenerate_docs):
-    """Short boilerplate docs put hot grams INSIDE every prefix — the
-    cap must drop them with accounting instead of expanding a
-    quadratic join."""
-    pairs = ngram_jaccard_pairs_prefix(
-        degenerate_docs, threshold=0.5, max_bucket=100
-    )
-    got = pairs.collect()
-    # the 1k-identical family exceeds the cap; the honest near-dup pair
-    # shares rare grams and survives
-    ids = {(r.doc_a, r.doc_b) for r in got}
-    assert (N_DUP + 1, N_DUP + 2) in ids
-    stats = pairs.bucket_overflow.collect()[0]
-    assert stats.overflow_buckets > 0
-    assert stats.max_bucket_size >= N_DUP
-    with pytest.raises(Exception, match="max_bucket"):
-        ngram_jaccard_pairs_prefix(
-            degenerate_docs, threshold=0.5, max_bucket=100, on_overflow="error"
-        ).collect()
 
 
 def test_simhash_rejects_radius_beyond_banding_guarantee(spark, degenerate_docs):

@@ -3,7 +3,8 @@
 - lineage_cut posture knob: local by default, reliable checkpoint
   under $SPARK_GRAFT_CHECKPOINT_DIR (r12 verdict item 7).
 - q230 literal-pattern rewrite equivalence (the crossJoin + per-row
-  RLIKE-compile form vs the single-aggregate literal form).
+  RLIKE-compile form vs the single-aggregate literal form), empty
+  input included.
 """
 
 from __future__ import annotations
@@ -31,15 +32,31 @@ def test_lineage_cut_local_by_default(spark, monkeypatch, tmp_path):
 def test_lineage_cut_reliable_under_env(spark, monkeypatch, tmp_path):
     ckpt = tmp_path / "ckpt"
     monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", str(ckpt))
-    df = lineage_cut(spark.range(10))
-    assert df.count() == 10
-    # reliable checkpoint: RDD blocks written under the configured dir
-    found = [
-        os.path.join(r, f)
-        for r, _, fs in os.walk(str(ckpt))
-        for f in fs
-    ]
-    assert found, "no checkpoint files written under SPARK_GRAFT_CHECKPOINT_DIR"
+    # the cut re-points the SHARED context's checkpoint dir; restore the
+    # raw Option (setCheckpointDir would nest a fresh uuid subdir) so
+    # later tests do not inherit this test's tmp_path
+    jsc = spark.sparkContext._jsc.sc()
+    prev = jsc.checkpointDir()
+    try:
+        df = lineage_cut(spark.range(10))
+        assert df.count() == 10
+        # reliable checkpoint: RDD blocks written under the configured dir
+        found = [
+            os.path.join(r, f)
+            for r, _, fs in os.walk(str(ckpt))
+            for f in fs
+        ]
+        assert found, "no checkpoint files written under SPARK_GRAFT_CHECKPOINT_DIR"
+    finally:
+        getattr(jsc, "checkpointDir_$eq")(prev)
+
+
+def test_lineage_cut_reliable_test_restores_checkpoint_dir(
+    spark, monkeypatch, tmp_path
+):
+    before = spark.sparkContext.getCheckpointDir()
+    test_lineage_cut_reliable_under_env(spark, monkeypatch, tmp_path)
+    assert spark.sparkContext.getCheckpointDir() == before
 
 
 def test_q230_literal_rewrite_matches_crossjoin_form(spark):
@@ -130,3 +147,21 @@ def test_extra_conf_java_options_merge_with_defaults():
     assert conf2["spark.executor.extraJavaOptions"] == "-Xss4m"
     with pytest.raises(ValueError, match="not k=v"):
         apply_env_conf({}, "oops-no-equals")
+
+
+def test_q230_empty_events_matches_oracle(spark, sf_dir, tmp_path):
+    """Over an empty events table the oracle (and the r12 crossJoin
+    form) emit no rows; the single global aggregate must not emit 3
+    rows with n_sessions = 0."""
+    import pyarrow.parquet as pq
+
+    from real_time_stream_processing_engine_spark.queries import ORACLE, QUERIES
+
+    from .oracle import compare, duck_connection
+
+    src = pq.read_table(os.path.join(sf_dir, "events.parquet"))
+    pq.write_table(src.slice(0, 0), str(tmp_path / "events.parquet"))
+    name = "q230_sequence_patterns"
+    got = QUERIES[name](spark, str(tmp_path))
+    res = compare(got, duck_connection(str(tmp_path)), ORACLE[name])
+    assert res["rows_oracle"] == 0 and res["ok"], res

@@ -659,36 +659,6 @@ def test_triangle_stats_empty_graph_zeros(spark):
 # ---------------------------------------------------------------------------
 
 
-def test_blocked_jaccard_boundary_pair_survives_epsilon(spark):
-    # doc A: 7 distinct grams all contained in doc B's 100: exact
-    # Jaccard = 0.07 == threshold; the unguarded length filter
-    # (100 * 0.07 = 7.000000000000001 <= 7 -> false) used to drop it
-    from real_time_stream_processing_engine_spark.operators.dedup import (
-        ngram_jaccard_pairs_blocked,
-    )
-
-    words = [f"w{i}" for i in range(101)]  # 100 bigrams
-    a_text = " ".join(words[:8])           # 7 bigrams, a prefix of b
-    b_text = " ".join(words)
-    d = spark.createDataFrame(
-        [(1, "x", a_text), (2, "x", b_text)], "doc_id long, lang string, text string"
-    )
-    out = ngram_jaccard_pairs_blocked(d, threshold=0.07).collect()
-    assert [(r.doc_a, r.doc_b, r.jaccard) for r in out] == [(1, 2, 0.07)]
-
-
-def test_blocked_jaccard_null_block_excluded(spark):
-    from real_time_stream_processing_engine_spark.operators.dedup import (
-        ngram_jaccard_pairs_blocked,
-    )
-
-    d = spark.createDataFrame(
-        [(1, None, "a b c d"), (2, None, "a b c d")],
-        "doc_id long, lang string, text string",
-    )
-    assert ngram_jaccard_pairs_blocked(d, threshold=0.5).count() == 0
-
-
 def test_exact_rank_zero_norm_vector_excluded(spark):
     # a zero embedding must neither ANSI-fail the query nor occupy a
     # top-k slot with a NULL score

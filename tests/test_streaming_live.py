@@ -250,32 +250,3 @@ def test_stream_countmin_equals_batch_sketch(spark, sf_dir):
     a = sorted(map(tuple, streamed.collect()))
     b = sorted(map(tuple, batch.collect()))
     assert a == b
-
-
-def test_transform_with_state_lifetime_stats_when_available(spark, sf_dir):
-    """The modern StatefulProcessor path (transformWithStateInPandas)
-    equals the batch groupBy — runs wherever google.protobuf exists
-    (env-gated here exactly like the Kafka connector; the classic
-    applyInPandasWithState path q32 covers custom state without it)."""
-    pytest.importorskip("google.protobuf.descriptor")
-    from real_time_stream_processing_engine_spark.sources.readers import load_table
-    from real_time_stream_processing_engine_spark.streaming.runner import (
-        stream_lifetime_stats_tws,
-    )
-
-    got = sorted(
-        map(tuple, stream_lifetime_stats_tws(spark, sf_dir).collect())
-    )
-    want = sorted(
-        map(
-            tuple,
-            load_table(spark, sf_dir, "events")
-            .groupBy("user_id")
-            .agg(
-                F.count("*").alias("n_events"),
-                F.round(F.sum("value"), 2).alias("sum_value"),
-            )
-            .collect(),
-        )
-    )
-    assert got == want
